@@ -637,17 +637,12 @@ def sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.lake import read_back, write_dual_sink
     from ..streaming.replay import scratch_dir
 
-    from ..sources.rfc import ParsedRfc
-
     base = scratch_dir(f"sink-{uuid.uuid4().hex[:8]}")
     parsed = parse_rfc_frame(_wa_frame(spark, sf_dir), FIELDS)
-    # both formats sink the SAME parse: persist the two channels so the
-    # wa-construction + split + cast pipeline runs once, not once per write
-    parsed = ParsedRfc(
-        valid=parsed.valid.persist(),
-        errors=parsed.errors.persist(),
-        fields=parsed.fields,
-    )
+    # both formats sink the SAME parse: persist the shared WA frame once so
+    # its construction runs once, not once per write; write_dual_sink leaves
+    # a frame the caller persisted alone
+    parsed.source.persist()
     try:
         rows = []
         for fmt in ("parquet", "json"):
@@ -662,8 +657,7 @@ def sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             rows.append((fmt, "error", err_n))
     finally:
-        parsed.valid.unpersist()
-        parsed.errors.unpersist()
+        parsed.source.unpersist()
     return spark.createDataFrame(rows, "fmt STRING, channel STRING, n_rows BIGINT")
 
 

@@ -6,7 +6,12 @@ The reference writes one S3 object per page under
 layout is produced by distributed writers: each task writes its partition's
 file (the page -> object mapping the reference maintains by hand falls out of
 partition-per-page planning), and the error channel is a second filtered
-write over the same cached parse.
+write over the same pages.  ``write_dual_sink`` caches the raw pages (the
+frame the parse was built from) while it writes: the valid write fetches
+every page once and fills the cache, and the error count and error write
+re-filter the cached pages instead of fetching from SAP again.  The typed
+parse is not cached, because building its columnar cache costs more than
+re-running the split and casts over the cached pages.
 """
 
 from __future__ import annotations
@@ -14,6 +19,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -126,27 +132,33 @@ def write_dual_sink(
     data_path = layout_path(base, RESULT_PREFIX, fmt, table, ts)
     err_path = layout_path(base, ERROR_PREFIX, fmt, table, ts)
 
-    # Asymmetric counting, sized for scale: the valid side (arbitrarily large)
-    # is counted via observe() as a side effect of its own write — no cache,
-    # no second scan; only the error side (small by construction, ~% of rows)
-    # is cached for its count-then-conditionally-write sequence.  The counts
-    # are the distributed twin of the reference's per-page counters
+    # The valid count is observed as a side effect of the valid write.  The
+    # raw pages are persisted for the duration of the call, so that write
+    # fetches each page once and fills the cache; the error count and the
+    # error write re-filter the cached pages.  Every page is read from SAP
+    # once, and both channels see the same snapshot.  A source the caller
+    # already persisted is left as it is.  The counts are the distributed
+    # twin of the reference's per-page counters
     # (pyrfc_read_table.py:119-122,151-153).
+    source = parsed.source
+    owned = source is not None and source.storageLevel == StorageLevel.NONE
+    if owned:
+        source.persist(StorageLevel.MEMORY_AND_DISK)
     obs = Observation()
     valid = parsed.valid.observe(obs, F.count(F.lit(1)).alias("n_valid"))
-    errors = parsed.errors.cache()
     try:
         valid.write.mode("append").format(fmt).save(data_path)
         if reference_naming:
             _apply_reference_naming(data_path, table, fmt)
-        n_err = errors.count()
+        n_err = parsed.errors.count()
         if n_err:  # reference only writes an error object when err rows exist (:219-221)
-            errors.write.mode("append").format(fmt).save(err_path)
+            parsed.errors.write.mode("append").format(fmt).save(err_path)
             if reference_naming:
                 _apply_reference_naming(err_path, table, fmt)
         return IngestReport(data_path, err_path, int(obs.get["n_valid"]), n_err)
     finally:
-        errors.unpersist()
+        if owned:
+            source.unpersist()
 
 
 def read_back(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:

@@ -9,15 +9,17 @@ prefix to S3 (:180-221).
 
 This module re-expresses each stage Spark-first:
 
-* **partition-per-page scan** — pages are planned up front and fetched by
-  executors in parallel (``read_rfc_table``), the distributed analogue of the
-  reference's ``ROWSKIPS/ROWCOUNT`` loop (S1/S2).  On a 1000-executor cluster
-  a 10^9-row SAP table becomes 10^4 concurrent page reads instead of 10^4
-  serial round-trips.
+* **partition-per-page scan** — pages are planned up front, exactly one per
+  input partition, and fetched by executors in parallel (``read_rfc_table``),
+  the distributed analogue of the reference's ``ROWSKIPS/ROWCOUNT`` loop
+  (S1/S2).  On a 1000-executor cluster a 10^9-row SAP table becomes 10^4
+  concurrent page reads instead of 10^4 serial round-trips.
 * **schema-from-catalog** — FIELDS metadata -> typed parse plan (S3).
 * **parse / validate / cast** — one ``select`` of built-in expressions
   (split, F.get, trim, try_cast): P1-P5, all whole-stage-codegen.
-* **valid / dead-letter split** — two filters over one cached parse (S6).
+* **valid / dead-letter split** — two filters over the raw pages (S6).  The
+  sink caches the raw pages, fetched once, so the error channel re-filters
+  them instead of fetching every page from SAP a second time.
 * **run-partitioned sinks** — parquet / json-lines under
   ``<fmt>/<table>/<run_ts>/`` with the error channel beside it (S4/S5/S7).
 
@@ -401,10 +403,11 @@ def read_rfc_table(
 ) -> tuple[DataFrame, list[RfcField]]:
     """Parallel paged scan of an RFC table.
 
-    Plans one input partition per ``ROWSKIPS/ROWCOUNT`` page and fetches
-    pages inside executors via ``mapInPandas`` (Arrow-batched), so the wire
-    protocol parallelism scales with the cluster instead of the reference's
-    one-page-in-flight loop.  Returns (raw WA DataFrame, FIELDS metadata).
+    Plans exactly one input partition per ``ROWSKIPS/ROWCOUNT`` page and
+    fetches pages inside executors via ``mapInPandas`` (Arrow-batched), so
+    the wire protocol parallelism scales with the cluster instead of the
+    reference's one-page-in-flight loop.  Returns (raw WA DataFrame, FIELDS
+    metadata).
     """
     probe = transport_factory()
     # NO_DATA: metadata-only probe — works even on tables whose full row
@@ -417,7 +420,10 @@ def read_rfc_table(
     n = total_rows if total_rows is not None else probe.row_count(query_table)
     n_pages = max(1, math.ceil(n / page_size))
 
-    pages = spark.range(n_pages).repartition(n_pages)
+    # range's own slicing puts page i alone in partition i; a round-robin
+    # repartition would add a shuffle and still leave some tasks two pages
+    # and others none
+    pages = spark.range(0, n_pages, 1, n_pages)
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         transport = transport_factory()
@@ -445,12 +451,19 @@ def read_rfc_table(
 
 @dataclass
 class ParsedRfc:
-    """One cached parse, two channels (the reference's data/data_err split,
-    pyrfc_read_table.py:143-149)."""
+    """One parse, two channels (the reference's data/data_err split,
+    pyrfc_read_table.py:143-149).
+
+    ``source`` is the raw frame both channels filter.  A consumer that reads
+    both channels persists ``source`` once (``write_dual_sink`` does), so
+    every page is fetched once.  The typed parse is not cached: the split
+    and casts are cheap codegen'd expressions, while building the columnar
+    cache of the typed rows costs more than re-running them."""
 
     valid: DataFrame
     errors: DataFrame  # original WA line + observed arity
     fields: list[RfcField] = field(default_factory=list)
+    source: DataFrame | None = None
 
 
 def parse_rfc_frame(
@@ -484,12 +497,5 @@ def parse_rfc_frame(
     errors = tagged.filter(F.col("__arity") != n).select(
         F.col(wa_col).alias("wa"), F.col("__arity").alias("arity")
     )
-    return ParsedRfc(valid=valid, errors=errors, fields=list(fields))
+    return ParsedRfc(valid=valid, errors=errors, fields=list(fields), source=raw)
 
-
-def ingest_counts(parsed: ParsedRfc) -> dict[str, int]:
-    """The reference's per-run counters (pyrfc_read_table.py:119-153):
-    valid + err must equal total."""
-    v = parsed.valid.count()
-    e = parsed.errors.count()
-    return {"valid_count": v, "err_count": e, "total_count": v + e}

@@ -33,12 +33,33 @@ def parsed(spark):
     return raw, fields, parse_rfc_frame(raw, fields)
 
 
+def _pages_per_partition(raw) -> dict[int, list[int]]:
+    rows = (
+        raw.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.sort_array(F.collect_set("page")).alias("pages"))
+        .collect()
+    )
+    return {r["pid"]: r["pages"] for r in rows}
+
+
 def test_pagination_covers_all_rows(parsed):
     raw, _, _ = parsed
     assert raw.count() == N_ROWS
     # partition-per-page: page ids 0..2, and the final page is short
     pages = {r["page"]: r["n"] for r in raw.groupBy("page").agg(F.count("*").alias("n")).collect()}
     assert pages == {0: PAGE, 1: PAGE, 2: N_ROWS - 2 * PAGE}
+    # exactly one page in each of the n_pages partitions, page i in partition
+    # i: part files then sort in page order, as reference naming expects
+    assert raw.rdd.getNumPartitions() == 3
+    assert _pages_per_partition(raw) == {i: [i] for i in range(3)}
+
+
+def test_one_page_per_partition_at_skewing_page_count(spark):
+    """12 pages: a round-robin repartition leaves some tasks two pages and
+    others none; every partition must hold exactly its own page."""
+    raw, _ = read_rfc_table(spark, lambda: MockRfcTransport(1200), "DD03L", page_size=100)
+    assert raw.rdd.getNumPartitions() == 12
+    assert _pages_per_partition(raw) == {i: [i] for i in range(12)}
 
 
 def test_count_invariant(parsed):
@@ -134,6 +155,56 @@ def test_reference_naming_append_continues_counter(spark, parsed):
         )
         total = read_back(spark, r2.data_path).count()
         assert total == r1.valid_count + r2.valid_count  # nothing clobbered
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "json"])
+def test_dual_sink_fetches_each_page_once(spark, fmt):
+    """The valid write fills the cache of raw pages; the error count and the
+    error write re-filter it, so the server sees one data call per page."""
+    calls = spark.sparkContext.accumulator(0)
+
+    class CountingTransport(MockRfcTransport):
+        def call(self, *args, **kwargs) -> dict:
+            if not kwargs.get("no_data"):
+                calls.add(1)
+            return super().call(*args, **kwargs)
+
+    raw, fields = read_rfc_table(
+        spark, lambda: CountingTransport(N_ROWS), "DD03L", page_size=PAGE
+    )
+    p = parse_rfc_frame(raw, fields)
+    n_err = len([i for i in range(N_ROWS) if i % 37 == 0])
+    with tempfile.TemporaryDirectory() as tmp:
+        report = write_dual_sink(p, tmp, "DD03L", fmt=fmt, run_ts="2026-01-01-00-00-00")
+    assert calls.value == 3  # ceil(N_ROWS / PAGE)
+    assert (report.valid_count, report.err_count) == (N_ROWS - n_err, n_err)
+
+
+def test_dual_sink_cache_hygiene(spark):
+    """write_dual_sink leaves the session's cache as it found it: nothing it
+    persisted outlives the call, and a frame the caller persisted stays
+    persisted."""
+    from pyspark import StorageLevel
+
+    raw, fields = read_rfc_table(
+        spark, lambda: MockRfcTransport(N_ROWS), "DD03L", page_size=PAGE
+    )
+    p = parse_rfc_frame(raw, fields)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with tempfile.TemporaryDirectory() as tmp:
+        write_dual_sink(p, tmp, "DD03L", run_ts="2026-01-01-00-00-00")
+    assert persistent().size() == before
+    for df in (p.source, p.valid, p.errors):
+        assert df.storageLevel == StorageLevel.NONE
+
+    p.source.persist(StorageLevel.MEMORY_ONLY)
+    try:
+        with tempfile.TemporaryDirectory() as tmp:
+            write_dual_sink(p, tmp, "DD03L", fmt="json", run_ts="2026-01-01-00-00-00")
+        assert p.source.storageLevel == StorageLevel.MEMORY_ONLY
+    finally:
+        p.source.unpersist()
 
 
 def test_projection_pushdown_capable_transport():
