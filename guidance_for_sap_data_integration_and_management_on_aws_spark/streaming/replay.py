@@ -19,19 +19,21 @@ Variants plant scenario-specific rows:
 * ``bad``     — props of event_id % 101 == 0 corrupted to ``'{bad'`` —
   exercises the T8 dead-letter split.
 
-Chunking is DISTRIBUTED (the r3 verdict's fix for the driver-side
-pandas materialization this replaces): rows get an exact global position
-via range-repartitioning on (ts, event_id) + a per-range prefix-sum of the
+Chunking is distributed: rows get an exact global position via
+range-repartitioning on (ts, event_id) + a per-range prefix-sum of the
 (tiny) range counts — the same two-level offset-stitch as
-``pipeline_pack_sequences`` — and each position-quartile chunk is written by
-Spark, coalesced to the single file the mtime-ordered file source needs.
-Only per-range COUNTS ever reach the driver.  Production streams read
-Kafka/files directly; every operator in ``ops.py`` is plain Structured
-Streaming and never touches this module's internals.
+``pipeline_pack_sequences`` — and are tagged with their position-quartile
+chunk.  One Spark job then writes every chunk, partitioned by that tag, and
+each chunk's single file is renamed into the flat directory the
+mtime-ordered file source reads.  Only per-range COUNTS ever reach the
+driver.  Production streams read Kafka/files directly; every operator in
+``ops.py`` is plain Structured Streaming and never touches this module's
+internals.
 """
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
 import shutil
@@ -99,8 +101,8 @@ def _with_global_pos(ev: DataFrame) -> tuple[DataFrame, int, DataFrame]:
     add a range-local row_number.  One narrow metadata collect; the event
     rows themselves never leave executors.  Also returns the persisted
     partitioned frame so the caller can unpersist it once the durable chunk
-    files are written (the cache backs the count pass + N_CHUNKS filtered
-    writes and has no use afterwards)."""
+    files are written (the cache backs the count pass and the one chunk
+    write, and has no use afterwards)."""
     part = ev.repartitionByRange(RANK_PARTS, "ts", "event_id").withColumn(
         "__pid", F.spark_partition_id()
     )
@@ -123,22 +125,37 @@ def _with_global_pos(ev: DataFrame) -> tuple[DataFrame, int, DataFrame]:
     return ranked, acc, part
 
 
-def _write_single_file(df: DataFrame, directory: str, filename: str, mtime: int) -> None:
-    """One sorted parquet FILE (the mtime-ordered stream source reads files,
-    not directories): coalesce to a single writer task, then surface the part
-    file under the target name."""
-    tmp = os.path.join(directory, f"__tmp_{filename}")
-    df.coalesce(1).sortWithinPartitions("ts", "event_id").write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    (part_file,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
-    path = os.path.join(directory, filename)
-    os.rename(part_file, path)
-    shutil.rmtree(tmp)
-    os.utime(path, (mtime, mtime))
-
-
 _BASE_MTIME = 1_600_000_000
+
+
+def _write_chunks(df: DataFrame, directory: str) -> None:
+    """Write every chunk of a replay in ONE job: ``df`` carries the events
+    columns plus ``__chunk`` in [0, N_CHUNKS), and chunk i lands as the
+    single sorted file ``chunk_00i.parquet`` (the mtime-ordered stream
+    source reads files, not directories) with mtime ``_BASE_MTIME + i``.
+
+    The explicit partition count is never coalesced by AQE, and hashing on
+    ``__chunk`` sends all of a chunk's rows to one task, so each chunk is one
+    part file even when two chunks share a task (the sort keeps each task's
+    chunks contiguous).  ``maxRecordsPerFile`` is pinned to 0 so a session
+    setting cannot split a chunk.  A chunk with no rows gets an empty file
+    with the events schema."""
+    tmp = os.path.join(directory, "__tmp")
+    df.repartition(N_CHUNKS, "__chunk").sortWithinPartitions(
+        "__chunk", "ts", "event_id"
+    ).write.option("maxRecordsPerFile", 0).partitionBy("__chunk").parquet(tmp)
+    for i in range(N_CHUNKS):
+        parts = glob.glob(os.path.join(tmp, f"__chunk={i}", "part-*.parquet"))
+        if not parts:
+            # no row landed in chunk i: write its schema alone
+            empty = os.path.join(tmp, f"empty_{i}")
+            df.drop("__chunk").limit(0).coalesce(1).write.parquet(empty)
+            parts = glob.glob(os.path.join(empty, "part-*.parquet"))
+        (part_file,) = parts
+        path = os.path.join(directory, f"chunk_{i:03d}.parquet")
+        os.rename(part_file, path)
+        os.utime(path, (_BASE_MTIME + i, _BASE_MTIME + i))
+    shutil.rmtree(tmp)
 
 
 def build_replay(spark: SparkSession, sf_dir: str, variant: str = "ordered") -> str:
@@ -146,15 +163,12 @@ def build_replay(spark: SparkSession, sf_dir: str, variant: str = "ordered") -> 
     returns the directory to point ``readStream`` at.  Cached per
     (sf_dir, variant) within the process — the chunk content is a pure
     function of both (chunk i = rows at global positions
-    [round(i*n/4), round((i+1)*n/4)) of the (ts, event_id) order, exactly
-    the slices the driver-side builder this replaces produced).
+    [round(i*n/4), round((i+1)*n/4)) of the (ts, event_id) order).
 
     Only "ordered" pays the global-rank pipeline; the scenario variants are
-    pure per-chunk file rewrites DERIVED from the ordered chunk files (r6
-    verdict: each variant re-running the rank + 4 full-scan writes charged
-    ~4s of replay build to its one consumer query — the dups build was most
-    of stream_dedup_within_watermark's 4.15x flag).  The derivations commute
-    with the rank because none of them touches the (ts, event_id) sort keys:
+    DERIVED from the ordered chunk files, so a variant's consumer query never
+    re-runs the rank over the events table.  The derivations commute with
+    the rank because none of them touches the (ts, event_id) sort keys:
     "bad" rewrites props in place, "dups" duplicates rows inside their own
     chunk, "late" moves whole rows between chunks."""
     cached = _REPLAY_CACHE.get((sf_dir, variant))
@@ -176,46 +190,44 @@ def build_replay(spark: SparkSession, sf_dir: str, variant: str = "ordered") -> 
     for i in range(N_CHUNKS):
         cond = F.col("__pos") < bounds[i + 1]
         chunk = F.when(cond, i) if chunk is None else chunk.when(cond, i)
-    ranked = ranked.withColumn("__chunk", chunk.otherwise(N_CHUNKS - 1))
+    ranked = ranked.select(*cols, chunk.otherwise(N_CHUNKS - 1).alias("__chunk"))
 
     out = scratch_dir("replay-ordered")
-    for i in range(N_CHUNKS):
-        cdf = ranked.filter(F.col("__chunk") == i).select(*cols)
-        _write_single_file(cdf, out, f"chunk_{i:03d}.parquet", _BASE_MTIME + i)
+    _write_chunks(ranked, out)
     cached_part.unpersist()  # chunk files are the durable artifact
     _REPLAY_CACHE[(sf_dir, "ordered")] = out
     return out
 
 
 def _derive_variant(spark: SparkSession, ordered_dir: str, variant: str) -> str:
-    """Rewrite the ordered chunk files into a scenario variant.  Each input
-    is one already-sorted single-file chunk (~n/N_CHUNKS rows), so every
-    derivation is a tiny local job — no rank, no events-table scan."""
+    """Rewrite the ordered chunk files into a scenario variant: read each
+    chunk tagged with its index, apply the variant as column expressions,
+    and write all chunks in one job — no rank, no events-table scan."""
     out = scratch_dir(f"replay-{variant}")
-    chunks = [
-        spark.read.parquet(os.path.join(ordered_dir, f"chunk_{i:03d}.parquet"))
-        for i in range(N_CHUNKS)
-    ]
-    for i, cdf in enumerate(chunks):
-        if variant == "bad":
-            cdf = cdf.withColumn(
-                "props",
-                F.when(F.col("event_id") % 101 == 0, F.lit("{bad")).otherwise(
-                    F.col("props")
-                ),
-            )
-        elif variant == "dups":
-            # every 10th event arrives twice within its own chunk
-            cdf = cdf.union(cdf.filter(F.col("event_id") % 10 == 0))
-        elif variant == "late":
-            if i < N_CHUNKS - 1:
-                # withheld from their ts-ordered chunk ...
-                cdf = cdf.filter(F.col("event_id") % 97 != 0)
-            else:
-                # ... and appended to the final chunk, days late
-                for earlier in chunks[: N_CHUNKS - 1]:
-                    cdf = cdf.union(earlier.filter(F.col("event_id") % 97 == 0))
-        _write_single_file(cdf, out, f"chunk_{i:03d}.parquet", _BASE_MTIME + i)
+    df = functools.reduce(
+        DataFrame.union,
+        [
+            spark.read.parquet(
+                os.path.join(ordered_dir, f"chunk_{i:03d}.parquet")
+            ).withColumn("__chunk", F.lit(i))
+            for i in range(N_CHUNKS)
+        ],
+    )
+    eid = F.col("event_id")
+    if variant == "bad":
+        df = df.withColumn(
+            "props", F.when(eid % 101 == 0, F.lit("{bad")).otherwise(F.col("props"))
+        )
+    elif variant == "dups":
+        # every 10th event arrives twice within its own chunk
+        df = df.union(df.filter(eid % 10 == 0))
+    elif variant == "late":
+        # withheld from their ts-ordered chunk and appended to the final
+        # chunk, days late
+        df = df.withColumn(
+            "__chunk", F.when(eid % 97 == 0, N_CHUNKS - 1).otherwise(F.col("__chunk"))
+        )
+    _write_chunks(df, out)
     return out
 
 

@@ -5,6 +5,7 @@ expectation, and the replay harness itself is deterministic."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from guidance_for_sap_data_integration_and_management_on_aws_spark.operators import ingest  # noqa: F401  (keeps import graph warm)
 from guidance_for_sap_data_integration_and_management_on_aws_spark.streaming.ops import (
@@ -431,6 +432,134 @@ def test_derived_replay_variants_match_their_contracts(spark, sf_dir):
     assert rows(chunk("late", N_CHUNKS - 1)) == sorted(
         rows(chunk("ordered", N_CHUNKS - 1)) + withheld
     )
+
+
+REPLAY_VARIANTS = ("ordered", "late", "dups", "bad")
+
+
+def _replay_spec(events_path: str, variant: str) -> list[list[tuple]]:
+    """Each chunk's rows of a replay variant, in file order, computed by
+    DuckDB straight from ``events.parquet`` (independent of the Spark
+    builder): chunk i holds positions [round(i*n/N), round((i+1)*n/N)) of the
+    (ts, event_id) order; ``late`` moves event_id % 97 == 0 rows to the final
+    chunk, ``dups`` repeats event_id % 10 == 0 rows inside their chunk, and
+    ``bad`` sets props to '{bad' on event_id % 101 == 0.  Every chunk is in
+    (ts, event_id) order."""
+    import duckdb
+
+    src = f"read_parquet('{events_path}')"
+    n = duckdb.execute(f"SELECT count(*) FROM {src}").fetchone()[0]
+    bounds = [round(i * n / N_CHUNKS) for i in range(N_CHUNKS + 1)]
+    chunk = (
+        "CASE "
+        + " ".join(f"WHEN pos < {bounds[i + 1]} THEN {i}" for i in range(N_CHUNKS))
+        + f" ELSE {N_CHUNKS - 1} END"
+    )
+    if variant == "late":
+        chunk = f"CASE WHEN event_id % 97 = 0 THEN {N_CHUNKS - 1} ELSE {chunk} END"
+    props = "CASE WHEN event_id % 101 = 0 THEN '{bad' ELSE props END" if variant == "bad" else "props"
+    dups = "event_id % 10 = 0" if variant == "dups" else "false"
+    rows = duckdb.execute(
+        f"""
+        WITH o AS (
+          SELECT *, row_number() OVER (ORDER BY ts, event_id) - 1 AS pos FROM {src}
+        ), c AS (
+          SELECT {chunk} AS chunk, event_id, ts, user_id, event_type, value,
+                 {props} AS props
+          FROM o
+        )
+        SELECT * FROM c UNION ALL SELECT * FROM c WHERE {dups}
+        ORDER BY chunk, ts, event_id
+        """
+    ).fetchall()
+    return [[r[1:] for r in rows if r[0] == i] for i in range(N_CHUNKS)]
+
+
+def test_replay_files_match_independent_spec(spark, sf_dir):
+    """Every replay chunk file equals the DuckDB spec row for row in file
+    order, carries exactly the events columns, and has mtime
+    ``_BASE_MTIME + i`` — the contract the mtime-ordered stream source and
+    the late-drop oracle rely on."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from guidance_for_sap_data_integration_and_management_on_aws_spark.streaming.replay import (
+        _BASE_MTIME,
+        build_replay,
+    )
+
+    events = f"{sf_dir}/events.parquet"
+    columns = pq.read_schema(events).names
+    for variant in REPLAY_VARIANTS:
+        replay_dir = build_replay(spark, sf_dir, variant)
+        for i, want in enumerate(_replay_spec(events, variant)):
+            path = os.path.join(replay_dir, f"chunk_{i:03d}.parquet")
+            table = pq.read_table(path)
+            assert table.column_names == columns, (variant, i, table.column_names)
+            assert [tuple(r.values()) for r in table.to_pylist()] == want, (variant, i)
+            assert os.stat(path).st_mtime == _BASE_MTIME + i, (variant, i)
+
+
+def test_replay_writes_each_variant_in_one_job(spark, sf_dir, monkeypatch):
+    """All chunks of a replay come from one ``DataFrameWriter.parquet`` call,
+    for ``ordered`` and for each variant derived from it."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from guidance_for_sap_data_integration_and_management_on_aws_spark.streaming import replay
+
+    calls = []
+    real_parquet = DataFrameWriter.parquet
+
+    def counting_parquet(self, path, *args, **kwargs):
+        calls.append(path)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
+    monkeypatch.setattr(replay, "_REPLAY_CACHE", {})
+    for variant in REPLAY_VARIANTS:
+        calls.clear()
+        replay.build_replay(spark, sf_dir, variant)
+        assert len(calls) == 1, (variant, calls)
+
+
+@pytest.mark.parametrize("n_rows", [0, 1, 3])
+def test_replay_with_fewer_events_than_chunks(spark, sf_dir, tmp_path, n_rows):
+    """An events table smaller than N_CHUNKS still yields N_CHUNKS readable
+    files per variant (empty chunks included), and the stream over it
+    matches its oracle."""
+    import os
+
+    import duckdb
+
+    from guidance_for_sap_data_integration_and_management_on_aws_spark.streaming.ops import (
+        stream_tumbling_agg,
+    )
+    from guidance_for_sap_data_integration_and_management_on_aws_spark.streaming.replay import (
+        build_replay,
+    )
+    from tests.oracle_harness import compare
+
+    events = f"{tmp_path}/events.parquet"
+    duckdb.execute(
+        f"COPY (SELECT * FROM read_parquet('{sf_dir}/events.parquet') "
+        f"ORDER BY event_id LIMIT {n_rows}) TO '{events}' (FORMAT parquet)"
+    )
+    for variant in REPLAY_VARIANTS:
+        replay_dir = build_replay(spark, str(tmp_path), variant)
+        spec = _replay_spec(events, variant)
+        for i in range(N_CHUNKS):
+            path = os.path.join(replay_dir, f"chunk_{i:03d}.parquet")
+            assert spark.read.parquet(path).count() == len(spec[i]), (variant, i)
+
+    with duckdb.connect() as con:
+        con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{events}')")
+        compare(
+            stream_tumbling_agg.builder(spark, str(tmp_path)),
+            con,
+            stream_tumbling_agg.oracle,
+            "stream_tumbling_agg",
+        )
 
 
 def test_pb_runtime_provisioning_is_idempotent_and_worker_visible(spark):
