@@ -1128,22 +1128,20 @@ def main(check: bool = False) -> None:
                 timings[name] = round(run(name), 3)
             except Exception as e:
                 errors[name] = f"{type(e).__name__}: {e}"[:200]
-    for frame in _PAIRS_CACHE.values():
-        frame.unpersist()
-    _PAIRS_CACHE.clear()
+    _PAIRS_CACHE.release()
     # ...and the reduced-dir candidate checkpoints built for
     # _shared_lsh_candidates above: the two LSH consumers are timed, so
     # the frames are dead weight from here — the same cache-inflation
-    # class this release block exists to prevent (round-10 advice; the
-    # full-SF entry is popped by the pipeline block below).  Dropping the
-    # dict reference lets the checkpoint blocks GC.
+    # class this release block exists to prevent (the full-SF entry is
+    # released by the pipeline block below).  Dropping the memo's
+    # reference lets the checkpoint blocks GC.
     from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-        _LSH_CAND_CACHE as _cand_cache,
+        _LSH_CAND_CACHE,
     )
 
     for pdir in {reduced.get(n, sf_dir) for n in lsh_consumers if n in qs}:
-        for key in [k for k in _cand_cache if k[1] == pdir and pdir != sf_dir]:
-            _cand_cache.pop(key)
+        if pdir != sf_dir:
+            _LSH_CAND_CACHE.release(pdir)
 
     # Mid-run multi-core sample (round 16, r15 verdict item 1): the start/
     # end samples bracket the run, so a contention wave that arrives AND
@@ -1164,9 +1162,6 @@ def main(check: bool = False) -> None:
     # the item is CLOSED-AS-PRICED via the c2_spike flag + stage_diag.
     try:
         from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-            _LSH_CAND_CACHE as _w8_cache,
-        )
-        from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
             minhash_lsh_pairs as _w8_pairs,
         )
 
@@ -1174,8 +1169,7 @@ def main(check: bool = False) -> None:
         _w8_pairs(spark, _w8_dir).write.mode("overwrite").format("noop").save()
         # release the warmup's candidate checkpoint (attribution hygiene:
         # nothing timed may inherit state this warmup built)
-        for key in [k for k in _w8_cache if k[1] == _w8_dir]:
-            _w8_cache.pop(key)
+        _LSH_CAND_CACHE.release(_w8_dir)
         time.sleep(2)
     except Exception as e:
         # a warmup must never take the bench down — but record the skip
@@ -1229,12 +1223,7 @@ def main(check: bool = False) -> None:
         # dict reference lets the ~8M-row checkpoint blocks GC instead of
         # pinning block-manager memory for the rest of the run (the
         # pair-frame release precedent)
-        from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
-            _LSH_CAND_CACHE,
-        )
-
-        for key in [k for k in _LSH_CAND_CACHE if k[1] == sf_dir]:
-            _LSH_CAND_CACHE.pop(key)
+        _LSH_CAND_CACHE.release(sf_dir)
     except Exception as e:
         errors[
             f"_lsh_pairs_pipeline[{os.path.basename(sf_dir.rstrip('/'))}]"

@@ -1,99 +1,67 @@
-"""Central registry of the per-(session, sf_dir) memoizer dicts.
+"""One memoizer for derived lake frames, shared across the queries of a session.
 
-Several operator families memoize an expensive derived frame per corpus
-snapshot (dedup's token/pair tables, graph's edge frame, the sketch fact
-tables).  Each cache is bounded — persisted frames through
-``dedup._cached_persisted`` (FIFO + unpersist), checkpointed frames through
-``bounded_put`` below (FIFO; dropping the reference lets the blocks GC) —
-but harness code — the bench's post-warmup cleanup in particular — needs to
-release EVERY entry pinned for a given sf_dir, not just the dicts it
-happens to know about (round-9 advice: the hard-coded two-dict sweep
-silently skipped graph._EDGE_CACHE and the sketch caches).  Modules
-register their dicts at definition time; ``clear_caches(sf_dir)`` is the
-one sweep point.
+Several operator families derive an expensive frame once per lake directory
+and serve it to many queries: dedup's token, mask, pair, shingle, banded
+candidate and component-label frames, graph's co-purchase edges, the sketch
+fact tables and the k-means seed rows.  Each of them is a :class:`Memo`.
 
-Registration is a side effect of importing the owning module, so callers
-that want a FULL sweep should import the operator modules first (the bench
-and the registry both already do — every builder lives in an imported
-module by the time a sweep runs).
+A ``Memo`` keys its entries on ``(applicationId, sf_dir, *extra)``, so a new
+SparkSession never sees a frame of a stopped one, and holds at most
+``CACHE_MAX_ENTRIES`` of them: the oldest is evicted first and unpersisted,
+so repeated sessions and lake directories do not pin executor storage.
+``build`` decides how the frame is kept (``persist()`` or
+``localCheckpoint(eager=True)``).
+
+``clear_caches(sf_dir)`` releases every entry for one directory across all
+memos; harness code calls it to start a timed region with empty memos.  A
+memo joins the sweep when its owning module is imported.
 """
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Any, Callable
 
-# (cache dict, key -> sf_dir extractor)
-_REGISTRY: list[tuple[dict, Callable]] = []
+CACHE_MAX_ENTRIES = 4  # one live lake directory plus headroom
 
-
-def register_cache(cache: dict, sf_of_key: Callable = lambda k: k[1]) -> dict:
-    """Register a memoizer dict for the global sweep and return it.
-
-    ``sf_of_key`` maps a cache key to its sf_dir; the default fits the
-    dominant ``(applicationId, sf_dir)`` keying.
-    """
-    _REGISTRY.append((cache, sf_of_key))
-    return cache
+_MEMOS: list[Memo] = []
 
 
-CACHE_MAX_ENTRIES = 4  # one live SF dir + headroom, matching dedup._CACHE_MAX
+def _unpersist(val: Any) -> None:
+    try:
+        val.unpersist()
+    except Exception:
+        pass  # not a frame, or its SparkSession is already stopped
 
 
-def bounded_put(cache: dict, key, val):
-    """FIFO-bounded insert for the CHECKPOINT-backed memoizers (CC labels,
-    edge frames, LSH candidates): insertion order = oldest first; evicted
-    frames are unpersist'ed where supported, and dropping the dict
-    reference lets a localCheckpoint's blocks be GC-reclaimed.  One
-    implementation so the bound can't drift per cache (the persisted-frame
-    twin with an eager unpersist contract is dedup._cached_persisted)."""
-    while len(cache) >= CACHE_MAX_ENTRIES:
-        old = cache.pop(next(iter(cache)))
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # non-persisted frame, or an already-stopped SparkSession
-    cache[key] = val
-    return val
+class Memo(dict):
+    """A FIFO-bounded memo of frames derived from one lake directory."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        _MEMOS.append(self)
+
+    def get_or_build(self, spark, sf_dir: str, build: Callable[[], Any], *extra):
+        """The value memoized for ``(spark, sf_dir, *extra)``, calling
+        ``build()`` on a miss.  A memoized ``None`` is a hit."""
+        key = (spark.sparkContext.applicationId, sf_dir, *extra)
+        if key in self:
+            return self[key]
+        val = build()
+        while len(self) >= CACHE_MAX_ENTRIES:
+            _unpersist(self.pop(next(iter(self))))  # insertion order: oldest first
+        self[key] = val
+        return val
+
+    def release(self, sf_dir: str | None = None) -> int:
+        """Drop and unpersist the entries for ``sf_dir`` (every entry when
+        None); returns how many were dropped."""
+        keys = [k for k in self if sf_dir is None or k[1] == sf_dir]
+        for k in keys:
+            _unpersist(self.pop(k))
+        return len(keys)
 
 
 def clear_caches(sf_dir: str | None = None) -> int:
-    """Drop (and unpersist, where the value supports it) every registered
-    cache entry for ``sf_dir`` — or every entry when ``sf_dir`` is None.
-    Returns the number of entries released."""
-    n = 0
-    for cache, sf_of in _REGISTRY:
-        # The extractor convention (key -> sf_dir string) is unchecked at
-        # registration; a cache keyed differently would be silently skipped
-        # or wrongly swept — fail loud instead (round-10 advice).  Each key's
-        # extraction runs ONCE (validation + match share the value) and an
-        # extractor that RAISES on an unexpected key shape (IndexError from
-        # the default lambda on a short tuple) surfaces as the same
-        # diagnostic TypeError instead of escaping raw (round-11 advice).
-        keyed = []
-        for k in cache:
-            try:
-                s = sf_of(k)
-            except Exception as e:
-                raise TypeError(
-                    f"registered cache key {k!r}: sf_of_key raised "
-                    f"{type(e).__name__}: {e} (expected an sf_dir string) — "
-                    "pass an explicit sf_of_key to register_cache for this "
-                    "keying"
-                ) from e
-            if not isinstance(s, str):
-                raise TypeError(
-                    f"registered cache key {k!r}: sf_of_key returned "
-                    f"{s!r} (expected an sf_dir string) — pass an "
-                    "explicit sf_of_key to register_cache for this keying"
-                )
-            keyed.append((k, s))
-        for key, s in keyed:
-            if sf_dir is not None and s != sf_dir:
-                continue
-            val = cache.pop(key)
-            try:
-                val.unpersist()
-            except Exception:
-                pass  # non-frame value, or an already-stopped SparkSession
-            n += 1
-    return n
+    """Release every memo entry for ``sf_dir`` (every entry when None);
+    returns the number of entries released."""
+    return sum(m.release(sf_dir) for m in _MEMOS)

@@ -49,103 +49,3 @@ def ddic_cast(raw: Column, type_code: str, *, decimal_scale: int = 3) -> Column:
         return F.unhex(c)
     # C (fixed char), g (variable string), and anything unknown: trimmed string
     return c
-
-
-# Spark's cast grammars, as RE2 regexes for DuckDB's regexp_full_match —
-# the same shapes saprfc_dsv2._py_cast gates with (its _INT_RE/_DEC_RE/
-# _DATE8_RE/_HEX_RE), expressed ASCII-only: DuckDB's RE2 has no unicode
-# digit class, so the one documented twin gap is that Spark's DECIMAL
-# string cast accepts unicode digits this SQL rejects — out of domain for
-# the ASCII RFC wire text the oracles consume.
-_SQL_INT_RX = "[+-]?[0-9]+"
-_SQL_DEC_RX = "[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?"
-
-
-def _sql_trimall(expr: str) -> str:
-    """Spark's cast-internal trim, in RE2: the numeric/decimal/double
-    string casts strip every char <= 0x20 from both ends before parsing
-    (so '\\t5' casts to 5 even though F.trim keeps the tab).  Date parsing
-    and unhex get no such layer — only the numeric branches use this."""
-    return (
-        f"regexp_replace(regexp_replace({expr}, "
-        f"'^[\\x00-\\x20]+', ''), '[\\x00-\\x20]+$', '')"
-    )
-
-
-def ddic_sql_cast(expr: str, type_code: str, *, decimal_scale: int = 3) -> str:
-    """DuckDB SQL twin of :func:`ddic_cast`, for authoring oracle queries.
-
-    A bare ``TRY_CAST`` is NOT a twin: DuckDB's string casts are laxer
-    than Spark's (round-12 differential — 32 divergent cells on a 600-word
-    ASCII corpus: integral casts accepted decimals/exponents/'0x' hex/
-    underscores and ROUNDED, strptime accepted 7-digit dates and even
-    'Infinity', doubles rejected Spark's Java f/F/d/D suffix, and
-    ``from_hex`` CRASHES on non-hex input instead of nulling).  Every
-    branch therefore gates on the exact grammar Spark's cast accepts
-    (mirroring ``saprfc_dsv2._py_cast``'s regexes) before the TRY_CAST,
-    and the twin claim is pinned by tests/test_ddic_sql_cast_diff.py over
-    an adversarial ASCII corpus.  Known domain limit, documented above:
-    unicode digits (Spark's DECIMAL cast accepts them; RE2 cannot) — the
-    RFC wire text the oracles model is ASCII.
-
-    The current registry oracles inline their SQL (written before this
-    helper was certified); this is the vetted building block for new ones.
-    """
-    c = f"trim({expr}, ' ')"  # F.trim twin: ASCII space ONLY
-    w = _sql_trimall(c)  # the numeric casts' internal <=0x20 trim
-    if type_code == "N":
-        return (
-            f"CASE WHEN regexp_full_match({w}, '{_SQL_INT_RX}') "
-            f"THEN TRY_CAST({w} AS BIGINT) END"
-        )
-    if type_code == "D":
-        return (
-            f"CASE WHEN regexp_full_match({c}, '[0-9]{{8}}') THEN "
-            f"CAST(try_strptime(NULLIF({c}, '{INITIAL_DATE}'), '%Y%m%d') AS DATE) END"
-        )
-    if type_code == "T":
-
-        def part(pos: int) -> str:
-            s = _sql_trimall(f"substring({c},{pos},2)")
-            return (
-                f"CASE WHEN regexp_full_match({s}, '{_SQL_INT_RX}') "
-                f"THEN TRY_CAST({s} AS INTEGER) END"
-            )
-
-        return f"({part(1)}*3600 + {part(3)}*60 + {part(5)})"
-    if type_code == "P":
-        # DuckDB's width check misses the rounding carry: TRY_CAST of
-        # '9'*35 || '.9995' into DECIMAL(38,3) keeps 10^35.000 — a 39-digit
-        # unscaled value its own declared precision forbids — where Spark
-        # overflows to NULL.  Bound the rounded result against the exact
-        # max decimal(38,scale) value.
-        mx = "9" * (38 - decimal_scale) + ("." + "9" * decimal_scale if decimal_scale else "")
-        cast = f"TRY_CAST({w} AS DECIMAL(38,{decimal_scale}))"
-        return (
-            f"CASE WHEN regexp_full_match({w}, '{_SQL_DEC_RX}') "
-            f"AND abs({cast}) <= CAST('{mx}' AS DECIMAL(38,{decimal_scale})) "
-            f"THEN {cast} END"
-        )
-    if type_code == "F":
-        # Spark's double cast accepts a Java trailing f/F/d/D suffix flush
-        # against the number, and rejects underscores Python/DuckDB allow
-        return (
-            f"CASE WHEN regexp_full_match({w}, '{_SQL_DEC_RX}[fFdD]') "
-            f"THEN TRY_CAST(substring({w}, 1, length({w})-1) AS DOUBLE) "
-            f"WHEN contains({w}, '_') THEN NULL "
-            f"ELSE TRY_CAST({w} AS DOUBLE) END"
-        )
-    if type_code in ("I", "s", "b"):
-        return (
-            f"CASE WHEN regexp_full_match({w}, '{_SQL_INT_RX}') "
-            f"THEN TRY_CAST({w} AS INTEGER) END"
-        )
-    if type_code in ("X", "y"):
-        # unhex semantics: odd length left-pads a zero nibble; non-hex ->
-        # NULL (from_hex alone RAISES on non-hex — crash-capable in an
-        # oracle, the round-12 differential's first finding)
-        return (
-            f"CASE WHEN regexp_full_match({c}, '[0-9a-fA-F]*') THEN "
-            f"from_hex(CASE WHEN length({c})%2=1 THEN '0'||{c} ELSE {c} END) END"
-        )
-    return c

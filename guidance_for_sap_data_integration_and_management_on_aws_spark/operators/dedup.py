@@ -22,7 +22,7 @@ from fractions import Fraction
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caches import bounded_put, register_cache
+from ..caches import Memo
 from ..catalog import load, parallelize_small_scan
 from ..functions.vector import cosine, sign_bucket, sql_cosine, sql_sign_bucket
 from ..registry import QuerySpec, spec
@@ -188,66 +188,33 @@ def _sql_jaccard_pairs(threshold: float) -> str:
     "(da, db, jaccard) frame is MEMOIZED per (session, sf_dir): it feeds "
     "this query, the CC fixpoint's edge set, and the LSH recall anchor — "
     "the in-session analog of materializing the verified-pair table once "
-    "per corpus snapshot (the _TOKEN_CACHE / graph._EDGE_CACHE precedent).",
+    "per corpus snapshot, like the token and co-purchase edge frames.",
 )
 def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _jaccard_pairs_cached(spark, sf_dir)
 
 
-_CACHE_MAX = 4  # one live SF dir + headroom; oldest unpersisted on evict
-
-
-def _cached_persisted(
-    cache: dict[tuple[str, str], DataFrame],
-    spark: SparkSession,
-    sf_dir: str,
-    build,
-) -> DataFrame:
-    """Shared bounded per-(session, sf_dir) memoizer for PERSISTED derived
-    frames (the token-set and verified-pair tables; graph.py's _EDGE_CACHE
-    is the checkpointed sibling).  FIFO eviction — insertion order = oldest
-    first; popitem() would evict the NEWEST and pin stale entries forever —
-    and eviction unpersists so repeated sessions don't pin executor
-    storage.  One implementation so the keying/bound/eviction invariants
-    can't drift between the caches."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
-    out = build().persist()
-    while len(cache) >= _CACHE_MAX:
-        old = cache.pop(next(iter(cache)))
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # frame may belong to an already-stopped SparkSession
-    cache[key] = out
-    return out
-
-
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+_PAIRS_CACHE = Memo()  # the persisted (da, db, jaccard) frame
 
 
 def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached_persisted(
-        _PAIRS_CACHE, spark, sf_dir, lambda: _jaccard_pairs_plan(spark, sf_dir)
+    return _PAIRS_CACHE.get_or_build(
+        spark, sf_dir, lambda: _jaccard_pairs_plan(spark, sf_dir).persist()
     )
 
 
-# EXACT BITSET VERIFY (round 16, r15 verdict item 2 — guide §2.3 "shuffle
-# keys and metadata instead of payloads" applied to the verify joins, §1.2
-# per-task work): when the corpus's GLOBAL token vocabulary fits one
+# EXACT BITSET VERIFY: when the corpus's GLOBAL token vocabulary fits one
 # machine word, each doc's token set is losslessly one 64-bit mask (token
 # -> unique bit, injective), so |A∩B| = bit_count(maskA & maskB) EXACTLY —
 # no per-pair hash-set builds, no array copies, pure whole-stage-codegen
-# integer ops.  The r15 driver run spent 43-53 s in the array_intersect
-# verify (~19 µs/pair x 9.5M pairs: two OpenHashSet builds + a result
-# array per pair); the mask verify attaches 16 bytes per side instead of
-# two ~25-element long arrays.  The guard is measured from the data (a
+# integer ops.  The array_intersect verify costs ~19 µs/pair (two
+# OpenHashSet builds + a result array per pair; 43-53 s over sf0.1's 9.5M
+# pairs); the mask verify attaches 16 bytes per side instead of two
+# ~25-element long arrays.  The guard is measured from the data (a
 # 65-token corpus falls back to the array kernel, tested), not assumed.
 BITSET_VOCAB_MAX = 64
 
-_MASK_CACHE: dict[tuple[str, str], DataFrame | None] = register_cache({})
+_MASK_CACHE = Memo()  # (doc_id, mask, n) frame, or None past the vocab guard
 
 
 def _token_mask_frame(toks: DataFrame) -> DataFrame | None:
@@ -293,12 +260,9 @@ def _token_mask_frame(toks: DataFrame) -> DataFrame | None:
 
 def _token_masks(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     """Memoized per (session, sf_dir) like the token frame it derives from
-    (None — vocab too wide — is memoized too, so the probe count runs once)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _MASK_CACHE:
-        return _MASK_CACHE[key]
-    return bounded_put(
-        _MASK_CACHE, key, _token_mask_frame(_hashed_token_sets(spark, sf_dir))
+    (None — vocab too wide — is memoized too, so the probe runs once)."""
+    return _MASK_CACHE.get_or_build(
+        spark, sf_dir, lambda: _token_mask_frame(_hashed_token_sets(spark, sf_dir))
     )
 
 
@@ -384,7 +348,7 @@ def _parallelize_scan(df: DataFrame) -> DataFrame:
     return parallelize_small_scan(df, "doc_id")
 
 
-_TOKEN_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+_TOKEN_CACHE = Memo()
 
 
 def _hashed_token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -395,12 +359,11 @@ def _hashed_token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     both near-dup paths verify on the same hashed universe).  Tokenize+hash
     runs on the parallelized scan, not the raw one-file fixture partition.
 
-    PERSISTED through the shared bounded memoizer, keyed by (app, sf_dir):
-    the frame feeds the LSH signature build AND both sides of the
-    candidate-verify re-attach (and the recall anchor runs the exact twin
-    on top), so without a cache the corpus is tokenized 3+ times per
-    query; a production job would persist per-run and unpersist in its
-    teardown."""
+    PERSISTED and memoized per (session, sf_dir): the frame feeds the LSH
+    signature build AND both sides of the candidate-verify re-attach (and
+    the recall anchor runs the exact twin on top), so without a cache the
+    corpus is tokenized 3+ times per query; a production job would persist
+    per-run and unpersist in its teardown."""
 
     def build() -> DataFrame:
         return parallelize_small_scan(
@@ -410,9 +373,9 @@ def _hashed_token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform(
                 F.array_distinct(F.split(F.col("text"), " ")), lambda w: F.xxhash64(w)
             ).alias("toks"),
-        )
+        ).persist()
 
-    return _cached_persisted(_TOKEN_CACHE, spark, sf_dir, build)
+    return _TOKEN_CACHE.get_or_build(spark, sf_dir, build)
 
 
 JACCARD_T = 0.6
@@ -635,26 +598,21 @@ def _lsh_band_candidates(hashed: DataFrame) -> DataFrame:
 
 # The materialized banded-candidate frame, memoized like cc_labels: the
 # checkpoint job costs seconds and BOTH consumers (dedup_minhash_lsh,
-# dedup_minhash_recall) rebuild the identical frame per builder call —
-# without the memo, merely CONSTRUCTING the query (plan/schema inspection,
-# the dtype tests) re-runs a multi-second job and strands checkpointed RDDs
-# until driver GC (round-9 advice).  Checkpointed = lineage-free, so no
-# persist/unpersist pairing is needed; registered for the global sweep.
-_LSH_CAND_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+# dedup_minhash_recall) would otherwise rebuild the identical frame per
+# builder call — merely CONSTRUCTING the query (plan/schema inspection, the
+# dtype tests) would re-run a multi-second job and strand checkpointed RDDs
+# until driver GC.
+_LSH_CAND_CACHE = Memo()
 
 
 def _lsh_candidates_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LSH_CAND_CACHE.get(key)
-    if hit is None:
-        hit = bounded_put(
-            _LSH_CAND_CACHE,
-            key,
-            _lsh_band_candidates(_hashed_token_sets(spark, sf_dir)).localCheckpoint(
-                eager=True
-            ),
-        )
-    return hit
+    return _LSH_CAND_CACHE.get_or_build(
+        spark,
+        sf_dir,
+        lambda: _lsh_band_candidates(_hashed_token_sets(spark, sf_dir)).localCheckpoint(
+            eager=True
+        ),
+    )
 
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -809,16 +767,14 @@ CC_MAX_ITERS = 25
 # selection; the fixpoint costs several join+checkpoint rounds, so memoize
 # the (already-checkpointed, lineage-free) result per (session, sf_dir) —
 # the in-session analog of materializing the cluster-label table once per
-# corpus snapshot.  Same precedent as graph._EDGE_CACHE / _SEED_CACHE.
-_CC_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+# corpus snapshot.
+_CC_CACHE = Memo()
 
 
 def cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CC_CACHE.get(key)
-    if hit is None:
-        hit = bounded_put(_CC_CACHE, key, _cc_labels_fixpoint(spark, sf_dir))
-    return hit
+    return _CC_CACHE.get_or_build(
+        spark, sf_dir, lambda: _cc_labels_fixpoint(spark, sf_dir)
+    )
 
 
 def _cc_labels_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1074,13 +1030,13 @@ def dedup_incremental_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a["w"] == b["w"] predicate would resolve trivially true and silently
     # degrade the equi-join to a cross product
     bp = prefix.filter(F.col("doc_id") % 5 == 0).select(
-        F.col("doc_id").alias("batch_id"),
+        F.col("doc_id").alias("da"),
         F.col("n").alias("bn"),
         F.col("rnk").alias("brnk"),
         F.col("w").alias("bw"),
     )
     cp = prefix.filter(F.col("doc_id") % 5 != 0).select(
-        F.col("doc_id").alias("corpus_id"),
+        F.col("doc_id").alias("db"),
         F.col("n").alias("cn"),
         F.col("rnk").alias("crnk"),
         F.col("w").alias("cw"),
@@ -1093,48 +1049,11 @@ def dedup_incremental_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("bn"), F.col("brnk"), F.col("cn"), F.col("crnk"), p, q
             ),
         )
-        .select("batch_id", "corpus_id")
-        .dropDuplicates(["batch_id", "corpus_id"])
+        .select("da", "db")
+        .dropDuplicates(["da", "db"])
     )
-    # exact bitset verify when the vocabulary fits one machine word (see
-    # BITSET_VOCAB_MAX): ~2.3M qualifying batch x corpus pairs at sf0.1 each
-    # paid an array_intersect hash-set build; the mask kernel is one AND +
-    # popcount per pair.  Wide vocabularies keep the array kernel.
-    masks = _token_masks(spark, sf_dir)
-    if masks is not None:
-        ta = masks.select(
-            F.col("doc_id").alias("batch_id"), F.col("mask").alias("__ma"),
-            F.col("n").alias("na"),
-        )
-        tb = masks.select(
-            F.col("doc_id").alias("corpus_id"), F.col("mask").alias("__mb"),
-            F.col("n").alias("nb"),
-        )
-        pairs = cand.join(F.broadcast(ta), "batch_id").join(
-            F.broadcast(tb), "corpus_id"
-        )
-        inter = F.bit_count(F.col("__ma").bitwiseAND(F.col("__mb"))).cast("double")
-        jac = F.round(inter / (F.col("na") + F.col("nb") - inter), 6)
-        return (
-            pairs.select("batch_id", "corpus_id", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= JACCARD_T)
-        )
-    sized = toks.select("doc_id", "toks", F.size("toks").alias("nt"))
-    ta = sized.select(
-        F.col("doc_id").alias("batch_id"), F.col("toks").alias("ta"),
-        F.col("nt").alias("na"),
-    )
-    tb = sized.select(
-        F.col("doc_id").alias("corpus_id"), F.col("toks").alias("tb"),
-        F.col("nt").alias("nb"),
-    )
-    # broadcast the token sets into the verify (see _jaccard_pairs_cached)
-    pairs = cand.join(F.broadcast(ta), "batch_id").join(F.broadcast(tb), "corpus_id")
-    inter = F.size(F.array_intersect("ta", "tb")).cast("double")
-    jac = F.round(inter / (F.col("na") + F.col("nb") - inter), 6)
-    return (
-        pairs.select("batch_id", "corpus_id", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_T)
+    return _exact_verify_stage(cand, toks, _token_masks(spark, sf_dir)).select(
+        F.col("da").alias("batch_id"), F.col("db").alias("corpus_id"), "jaccard"
     )
 
 
@@ -1208,7 +1127,7 @@ CONTAIN_NGRAM = 3  # shingle width: word 3-grams (token SETS saturate on the
 # fixture's small vocabulary — 144k of 500^2 directed pairs pass at tau=0.8 —
 # while 3-gram shingles isolate the planted near-dup mass exactly)
 
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+_SHINGLE_CACHE = Memo()
 
 
 def _hashed_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1228,9 +1147,9 @@ def _hashed_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_distinct(_word_shingles(words, CONTAIN_NGRAM)),
                 lambda g: F.xxhash64(g),
             ).alias("toks"),
-        )
+        ).persist()
 
-    return _cached_persisted(_SHINGLE_CACHE, spark, sf_dir, build)
+    return _SHINGLE_CACHE.get_or_build(spark, sf_dir, build)
 
 
 @spec(

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caches import register_cache
+from ..caches import Memo
 from ..catalog import load, materialize_if_wide, parallelize_small_scan
 from ..functions.vector import (
     as_double,
@@ -269,23 +269,23 @@ def seed_vectors(v: DataFrame, k: int) -> DataFrame:
     )
 
 
-# Collected seed sets, keyed (app, sf_dir, k).  A codebook is trained once
-# and served by MANY queries — the production posture — so the k x dim rows
-# (a few KB) are memoized per session instead of re-running the TakeOrdered
-# job per query (measured ~1-3 s of cold job overhead per collect).  Same
-# precedent as dedup's _TOKEN_CACHE; entries are plain Rows, no executor
-# storage pinned, so no eviction is needed.
-_SEED_CACHE: dict[tuple[str, str, int], list] = register_cache({})
+# Collected seed sets, memoized per (session, sf_dir, k).  A codebook is
+# trained once and served by MANY queries — the production posture — so the
+# k x dim rows (a few KB) are memoized instead of re-running the TakeOrdered
+# job per query (measured ~1-3 s of cold job overhead per collect).  Entries
+# are plain Rows that pin no executor storage; an evicted entry costs one
+# small recompute.
+_SEED_CACHE = Memo()
 
 
 def seed_rows(spark: SparkSession, v: DataFrame, k: int, sf_dir: str) -> list:
     """cid-sorted collected seed rows for (sf_dir, k), memoized per session."""
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    hit = _SEED_CACHE.get(key)
-    if hit is None:
-        hit = sorted(seed_vectors(v, k).collect(), key=lambda r: r["cid"])
-        _SEED_CACHE[key] = hit
-    return hit
+    return _SEED_CACHE.get_or_build(
+        spark,
+        sf_dir,
+        lambda: sorted(seed_vectors(v, k).collect(), key=lambda r: r["cid"]),
+        k,
+    )
 
 
 def auto_ivf_k(n_vectors: int, target: int = TARGET_BUCKET_OCCUPANCY) -> int:

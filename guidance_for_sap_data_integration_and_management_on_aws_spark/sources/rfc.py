@@ -471,7 +471,6 @@ def parse_rfc_frame(
     fields: Sequence[RfcField],
     *,
     delimiter: str = DEFAULT_DELIMITER,
-    wa_col: str = "wa",
 ) -> ParsedRfc:
     """P1 delimited parse -> P2 arity validity -> P3 naming -> P4 trim ->
     P5 DDIC cast, as one declarative select (single pass, codegen'd).
@@ -484,7 +483,7 @@ def parse_rfc_frame(
     # ('|', '.') splits literally, matching the DSv2 twin's str.split and the
     # reference's literal split (round-1 advice).  re.escape backslash-escapes
     # every non-alphanumeric, which Java regex reads as the literal char.
-    arr = F.split(F.trim(F.col(wa_col)), re.escape(delimiter), -1)
+    arr = F.split(F.trim(F.col("wa")), re.escape(delimiter), -1)
     tagged = raw.withColumn("__arr", arr).withColumn("__arity", F.size(F.col("__arr")))
 
     typed: list[Column] = [
@@ -495,7 +494,7 @@ def parse_rfc_frame(
     ]
     valid = tagged.filter(F.col("__arity") == n).select(*typed)
     errors = tagged.filter(F.col("__arity") != n).select(
-        F.col(wa_col).alias("wa"), F.col("__arity").alias("arity")
+        "wa", F.col("__arity").alias("arity")
     )
     return ParsedRfc(valid=valid, errors=errors, fields=list(fields), source=raw)
 

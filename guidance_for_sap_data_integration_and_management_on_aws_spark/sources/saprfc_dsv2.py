@@ -158,29 +158,6 @@ def _spark_type(f: RfcField):
     return StringType()
 
 
-def _pa_type(f: RfcField):
-    """Arrow twin of _spark_type — the RecordBatch schema Spark expects for
-    this scan (Spark's own Arrow mapping of the declared StructType)."""
-    import pyarrow as pa
-
-    code = f.type_code
-    if code == "N":
-        return pa.int64()
-    if code == "D":
-        return pa.date32()
-    if code == "T":
-        return pa.int32()
-    if code == "P":
-        return pa.decimal128(38, f.decimal_scale)
-    if code == "F":
-        return pa.float64()
-    if code in ("I", "s", "b"):
-        return pa.int32()
-    if code in ("X", "y"):
-        return pa.binary()
-    return pa.string()
-
-
 _INT_RE = re.compile(r"[+-]?[0-9]+")
 _DATE8_RE = re.compile(r"[0-9]{8}")
 _HEX_RE = re.compile(r"[0-9a-fA-F]*")
@@ -1217,6 +1194,7 @@ class SapRfcReader(DataSourceReader):
         (de)serialization per batch instead of one pickled tuple per row —
         the Python Data Source API's vectorized path."""
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
 
         transport = _transport_from_options(self.options)
         # skip/count are planned by partitions() — page-size-bounded slices
@@ -1242,8 +1220,9 @@ class SapRfcReader(DataSourceReader):
         emit_corrupt = all(
             _eval_filter(flt, null_row) is True for flt in self.accepted
         )
+        # Spark's own Arrow image of the declared StructType
         schema = pa.schema(
-            [pa.field(f.name, _pa_type(f)) for f in fields]
+            [pa.field(f.name, to_arrow_type(_spark_type(f))) for f in fields]
             + [pa.field(CORRUPT_COL, pa.string())]
         )
         cols: list[list] = [[] for _ in range(n + 1)]

@@ -109,3 +109,38 @@ def test_prefix_frame_fast_path_matches_window_path(spark):
         assert sorted(map(tuple, fast.collect())) == sorted(
             map(tuple, slow.collect())
         ), f"t={t}"
+
+
+def test_incremental_jaccard_wide_vocab_matches_oracle(spark, tmp_path):
+    """Past the 64-token guard, dedup_incremental_jaccard takes the array
+    kernel of the shared verify stage and must still hash-match its DuckDB
+    oracle.  Six clusters of five near-duplicate docs (doc_id % 5 == 0 is
+    the batch member) over a 102-token vocabulary."""
+    import duckdb
+
+    from guidance_for_sap_data_integration_and_management_on_aws_spark.operators.dedup import (
+        _token_masks,
+        dedup_incremental_jaccard,
+    )
+    from tests.oracle_harness import compare
+
+    rows = []
+    for c in range(6):
+        base = [f"c{c}w{j}" for j in range(12)]
+        for m in range(5):
+            # each member swaps one base token for its own variant token
+            words = base[:m] + [f"c{c}v{m}"] + base[m + 1 :]
+            rows.append((c * 5 + m, " ".join(words)))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", rows)
+    con.execute(f"COPY docs TO '{tmp_path}/documents.parquet' (FORMAT parquet)")
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    sf = str(tmp_path)
+    assert _token_masks(spark, sf) is None  # vocabulary too wide for a mask
+    q = dedup_incremental_jaccard
+    got = q.builder(spark, sf)
+    assert got.count() == 6 * 4  # every batch doc matches its four corpus twins
+    compare(got, con, q.oracle, q.builder.__name__)

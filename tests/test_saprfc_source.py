@@ -749,39 +749,6 @@ def test_in_three_valued_semantics_match_spark(spark):
     assert _eval_filter(In(("c",), (7, "a")), {"c": "a"}) is True
 
 
-def test_clear_caches_extractor_guards():
-    """clear_caches fail-loud convention (r10 advice + r11 refinement): a
-    non-string sf_of_key result AND a raising extractor both surface as the
-    diagnostic TypeError; the extractor runs once per key."""
-    import pytest
-
-    from guidance_for_sap_data_integration_and_management_on_aws_spark import caches
-
-    calls = []
-
-    def sf_of(k):
-        calls.append(k)
-        return k[1]
-
-    n_before = len(caches._REGISTRY)
-    try:
-        caches.register_cache({("app", "/sf/dir"): object()}, sf_of)
-        assert caches.clear_caches("/sf/dir") == 1
-        assert calls == [("app", "/sf/dir")]  # single extraction per key
-        bad_type = caches.register_cache({("app", 42): object()})
-        with pytest.raises(TypeError, match="sf_of_key returned"):
-            caches.clear_caches("/sf/dir")
-        bad_type.clear()
-        bad_raise = caches.register_cache({("short",): object()})
-        with pytest.raises(TypeError, match="sf_of_key raised"):
-            caches.clear_caches("/sf/dir")
-        bad_raise.clear()
-        caches.clear_caches(None)  # emptied test dicts sweep clean
-    finally:
-        # deregister the test dicts so later sweeps don't re-validate them
-        del caches._REGISTRY[n_before:]
-
-
 def test_negative_maxrows_rejected():
     """A negative bound must fail loud at reader construction: passed
     through, Python-slice semantics on the mock silently return 'all but
@@ -794,28 +761,6 @@ def test_negative_maxrows_rejected():
 
     with pytest.raises(ValueError, match="maxrows must be positive"):
         SapRfcReader({"mockrows": "100", "maxrows": "-5"}, list(MockRfcTransport.FIELDS))
-
-
-def test_arrow_schema_twin_matches_spark_mapping():
-    """_pa_type must be exactly Spark's own Arrow image of _spark_type for
-    every DDIC code (including every decimal scale the P path can carry):
-    the reader declares the StructType through one function and builds its
-    RecordBatches through the other, and a silent divergence (say, a P
-    scale mismatch) crashes the Arrow column build at read time on the
-    executor — the differential-pin convention applied to this type-map
-    twin."""
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.sources.rfc import RfcField
-    from guidance_for_sap_data_integration_and_management_on_aws_spark.sources.saprfc_dsv2 import (
-        _pa_type,
-        _spark_type,
-    )
-
-    for code in ["C", "N", "D", "T", "P", "F", "I", "s", "b", "X", "y", "g"]:
-        for scale in (0, 2, 3, 10, 38):
-            f = RfcField("F1", code, decimal_scale=scale)
-            assert _pa_type(f) == to_arrow_type(_spark_type(f)), (code, scale)
 
 
 def test_stream_restart_clamp_never_rewinds_behind_checkpoint():
